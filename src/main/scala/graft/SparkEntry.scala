@@ -394,7 +394,11 @@ object SparkEntry {
     // shape: per k, ROUNDS-AVERAGED total BFS and approximation-phase BFS of
     // the certified Chechik top-k run (rounds = 2, averaged as doubles,
     // Main.java:60-72,110-117; k grid 1,20,40,... — truncated to ≤ n/10 here
-    // where the reference's 2000 cap assumes web-scale graphs).
+    // where the reference's 2000 cap assumes web-scale graphs). apx_bfs is
+    // total minus the certification loop's exact BFS: the pivot BFS plus
+    // the sample visits, whose exact farness the run reuses — so at sf0.001,
+    // where K ≥ n forces the whole vertex set into the sample, apx_bfs =
+    // total_bfs = n and the loop runs no BFS.
     //
     // PERMANENT ORACLE EXEMPTION (rows-only by design, rounds 2-5): the BFS
     // counts come from Spark-side seeded sampling (Chechik pivot draws) that

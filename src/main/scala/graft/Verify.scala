@@ -33,13 +33,21 @@ object Verify {
     val ordered = selected.toSeq.sortBy { case (name, _) =>
       (SparkEntry.expensiveLast.indexOf(name), name)
     }
-    ordered.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name.parquet")
-      catch { case e: Throwable =>
+    // one `[verify] <name> <rows> <seconds>` line per query; a failed query
+    // is reported and the run goes on, but the exit status is non-zero
+    val failed = ordered.filterNot { case (name, fn) =>
+      val path = s"$outDir/$name.parquet"
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(path)
+        val rows = spark.read.parquet(path).count()
+        println(f"[verify] $name $rows ${(System.nanoTime() - t0) / 1e9}%.1f")
+        true
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        false
       }
-    }
+    }.map(_._1)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -61,5 +69,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -21,6 +21,18 @@ import org.apache.spark.sql.functions._
   *     once exactCloseness(v) ≥ (1+ε)·max apxCloseness of the unprocessed;
   *     stop at ≥ k certified.
   *
+  * Invariants that let the run skip work the reference repeats:
+  *  - Forced sample: λ ≥ 1/n, so K ≥ n makes every p_v = 1 and S = V
+  *    whatever the pivots reach. Steps 1-3 are then skipped (no pivot
+  *    draw, no pivot BFS) and the telemetry reports 0 initial pivots.
+  *  - Sample farness is exact: on the symmetrized graph the sample visit's
+  *    Σ_v d(s,v) is F(s) for every s ∈ S, so S enters the certification
+  *    set `processed` with its exact farness, and the schedule ranks only
+  *    V∖S. Adding exactly-known vertices to `processed` cannot weaken the
+  *    (1+ε) bound on the unprocessed remainder, so the certified top-k is
+  *    exact in every regime. When S = V no schedule or loop is built and
+  *    `exactBfs` (the BFS the loop ran) is 0.
+  *
   * Determinism: the reference uses Math.random() (ChechikEstimator.java:60);
   * we use xxhash64-derived uniforms keyed by (seed, vertex id) — fully
   * deterministic and partition-independent (SURVEY.md §4.2.4), unlike
@@ -80,7 +92,7 @@ object Chechik {
       forceBitset: Option[Boolean] = None,
       prep: BitsetBfs.Prep = null): DataFrame = {
     val p = pivots.select(col("pivot").cast("long").as("pivot")).distinct()
-      .localCheckpoint(true)
+      .localCheckpoint(false)
     val nPiv = p.count()
     val maxr =
       if (forceBitset.getOrElse(useBitset(nPiv, n))) {
@@ -111,6 +123,12 @@ object Chechik {
       .withColumn("p", least(lit(1.0), lit(kCoef) * col("lambda")))
   }
 
+  /** Per-pivot exact farness (id, farness) of a row-BFS (pivot, id, dist)
+    * relation — the row-path twin of [[BitsetBfs.farness]].
+    */
+  private def rowFarness(dist: DataFrame): DataFrame =
+    dist.groupBy(col("pivot").as("id")).agg(sum("dist").cast("long").as("farness"))
+
   def topkCloseness(
       spark: SparkSession,
       adjacency: DataFrame,
@@ -123,117 +141,125 @@ object Chechik {
     var supersteps = 0L
     val countStep = (_: Int, _: Long) => supersteps += 1
 
-    val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(true)
+    // lazy checkpoint: the count is the job that materializes it
+    val verts = adjacency.select(col("src").as("id")).distinct().localCheckpoint(false)
     val n = verts.count()
-    // chunk-keyed visit inputs shared across EVERY bitset visit of the run
-    // (estimator, sample, one per certification batch) — built once here
-    // instead of an arcs-row repartition per visit
-    val bprep = BitsetBfs.prepare(adjacency)
-    val nPivots = math.max(math.ceil(math.log(n.toDouble) / math.log(2)).toLong, 2L).min(n)
+    // chunk-keyed visit inputs shared by every bitset visit of the run,
+    // built on the first visit that takes the bitset path
+    var bprep: BitsetBfs.Prep = null
+    def prep(): BitsetBfs.Prep = {
+      if (bprep == null) bprep = BitsetBfs.prepare(adjacency)
+      bprep
+    }
+    val forced = kCoefficient(n, eps) >= n
+    val nPivots =
+      if (forced) 0L
+      else math.max(math.ceil(math.log(n.toDouble) / math.log(2)).toLong, 2L).min(n)
 
-    // 1. uniform pivot sample without replacement, seeded (R1)
-    val pivots = verts
-      .orderBy(xxhash64(lit(seed), col("id")))
-      .limit(nPivots.toInt)
-      .select(col("id").as("pivot"))
+    // 1-4. Bernoulli sample S (R2) by the keep probabilities of the pivot
+    // BFS (A9/A10); a forced sample is V with p = 1
+    val (sample, sampleSize) =
+      if (forced) (verts.withColumn("p", lit(1.0)), n)
+      else {
+        // uniform pivot sample without replacement, seeded (R1)
+        val pivots = verts
+          .orderBy(xxhash64(lit(seed), col("id")))
+          .limit(nPivots.toInt)
+          .select(col("id").as("pivot"))
+        val s = estimatorCoefficients(spark, adjacency, pivots, verts, n, eps, countStep,
+            prep = if (useBitset(nPivots, n)) prep() else null)
+          .select(col("id"), col("p"))
+          .where(u01(seed + 1, col("id")) < col("p"))
+          .localCheckpoint(false)
+        (s, s.count())
+      }
+    val unsampled = n - sampleSize
+    val sampleIds = sample.select(col("id").as("pivot"))
 
-    // 2-3. λ coefficients + keep probabilities from the pivot BFS (A9/A10)
-    val probs = estimatorCoefficients(spark, adjacency, pivots, verts, n, eps, countStep,
-        prep = bprep)
-      .select(col("id"), col("p"))
-
-    // 4. Bernoulli sample S (R2), HT farness estimate apxF(v) = Σ_s d(s,v)/p_s.
-    // The sample is the web-scale cardinality (K·E[λ]·n), so past the
-    // useBitset cap the row-BFS O(S·n) relation must never materialize:
-    // bitset visit + divisor-array reverse sum keeps it O(n·maskCols)/wave
-    val sample = probs.where(u01(seed + 1, col("id")) < col("p")).localCheckpoint(true)
-    val sampleSize = sample.count()
-
-    val apxFarness =
+    // Sample visit: exact farness of every s ∈ S and, when V∖S is not
+    // empty, the HT estimate apxF(v) = Σ_s d(s,v)/p_s that orders it. The
+    // sample is the web-scale cardinality (K·E[λ]·n), so past the useBitset
+    // cap the row-BFS O(S·n) relation must never materialize: bitset visit
+    // + divisor-array reverse sum keeps it O(n·maskCols)/wave
+    val (sampleFarness, apxFarness) =
       if (useBitset(sampleSize, n)) {
-        val vSample = BitsetBfs.visit(spark, adjacency,
-          sample.select(col("id").as("pivot")),
+        val vSample = BitsetBfs.visit(spark, adjacency, sampleIds,
           maskCols = maskColsFor(sampleSize), onSuperstep = countStep,
-          prep = bprep)
-        val out = BitsetBfs.reverseSum(
-            vSample, sample.select(col("id").as("pivot"), col("p").as("div")))
-          .select(col("id"), col("value").as("apxF"))
-          .localCheckpoint(true)
+          prep = prep())
+        val far = BitsetBfs.farness(vSample).localCheckpoint(true)
+        val apx = if (unsampled == 0) None else Some(
+          BitsetBfs.reverseSum(
+              vSample, sample.select(col("id").as("pivot"), col("p").as("div")))
+            .select(col("id"), col("value").as("apxF"))
+            .localCheckpoint(true))
         vSample.release()
-        out
+        (far, apx)
       } else {
-        MultiBfs.run(spark, adjacency, sample.select(col("id").as("pivot")),
-            onSuperstep = countStep)
-          .join(sample.select(col("id").as("pivot"), col("p")), "pivot")
-          .groupBy("id")
-          .agg(sum(col("dist").cast("double") / col("p")).as("apxF"))
+        val dist = MultiBfs.run(spark, adjacency, sampleIds, onSuperstep = countStep)
+        val far = rowFarness(dist)
+        val apx = if (unsampled == 0) None else Some(
+          dist.join(sample.select(col("id").as("pivot"), col("p")), "pivot")
+            .groupBy("id")
+            .agg(sum(col("dist").cast("double") / col("p")).as("apxF")))
+        (far, apx)
       }
 
-    // 5. certification loop. Schedule position via distributed range minting
-    // (Rank.globalRank) — the schedule is n rows and a global row_number
-    // window would sort all n through ONE task at scale.
-    val schedule = graft.core.Rank.globalRank(
-      verts
-        .join(apxFarness, Seq("id"), "left")
-        .select(col("id"), coalesce(col("apxF"), lit(Double.MaxValue)).as("apxF")),
-      "pos", asc("apxF"), asc("id"))
-      .localCheckpoint(true)
-
+    // 5. certification loop over V∖S. Schedule position via distributed
+    // range minting (Rank.globalRank) — the schedule is up to n rows and a
+    // global row_number window would sort all of them through ONE task.
     // Reference batches 10 BFS between re-sorts (TopCloseness.java:22); under
     // level-synchronous execution a batch is ONE multi-source BFS, so larger
     // batches amortize per-superstep job overhead — the certification
     // guarantee is unchanged, at most one batch of extra exact BFS work.
-    val batch = math.max(k, batchSize)
-    var processed: Option[DataFrame] = None
-    var l = 0L
-    var certified = 0L
+    var processed = sampleFarness
     var exactBfs = 0L
-    while (certified < k && l < n) {
-      val batchIds = schedule.where(col("pos") >= l && col("pos") < l + batch)
-        .select(col("id").as("pivot"))
-      // exact farness per batch pivot; past the useBitset cap a batch is one
-      // wave-packed visit, O(n·maskCols) rows/superstep, not O(batch·n)
-      val (exactF, releaseBatch) =
-        if (useBitset(batch, n)) {
-          // the shared chunk-keyed `bprep` saves an arcs-row repartition +
-          // checkpoint per batch — the loop runs one visit per batch
-          val vb = BitsetBfs.visit(spark, adjacency, batchIds,
-            maskCols = maskColsFor(batch), onSuperstep = countStep,
-            prep = bprep)
-          (BitsetBfs.farness(vb).select(col("id"), col("farness")),
-            () => vb.release())
-        } else
-          (MultiBfs.run(spark, adjacency, batchIds, onSuperstep = countStep)
-            .groupBy(col("pivot").as("id"))
-            .agg(sum("dist").cast("long").as("farness")),
-            () => ())
-      processed = Some(mat.iterate(
-        processed.map(_.unionAll(exactF)).getOrElse(exactF), (l / batch).toInt, certified.toDouble))
-      // `processed` is materialized (mat.iterate is eager) — the batch
-      // visit's cached superstep states are dead now; without this each
-      // certification batch leaked its whole state history for the rest of
-      // the run (round-3 advice)
-      releaseBatch()
-      // batch size is derivable from the dense schedule bounds — positions
-      // are 0..n-1, so [l, l+batch) holds min(batch, n−l) ids; a count()
-      // here was a full scan job inside the flagship's hot loop (round-2
-      // verdict #3)
-      exactBfs += math.min(batch, n - l)
-      l += batch
-      // ONE aggregate job per batch (round-3 verdict #4 merged the former
-      // threshold job + certified-count job): the 1-row remainder aggregate
-      // — the largest possible true closeness among unprocessed candidates —
-      // broadcasts into a crossJoin and the certified count folds over it in
-      // the same action.
-      val remAgg = schedule.where(col("pos") >= l)
-        .agg(coalesce(max(lit(1.0) / nullif(col("apxF"), lit(0.0))), lit(0.0))
-          .as("maxRem"))
-      certified = processed.get
-        .crossJoin(broadcast(remAgg))
-        .agg(count(when(
-          col("farness") > 0 &&
-            lit(1.0) / col("farness") >= lit(1.0 + eps) * col("maxRem"), 1)))
-        .head().getLong(0)
+    apxFarness.foreach { apx =>
+      val schedule = graft.core.Rank.globalRank(
+        verts
+          .join(sample, Seq("id"), "left_anti")
+          .join(apx, Seq("id"), "left")
+          .select(col("id"), coalesce(col("apxF"), lit(Double.MaxValue)).as("apxF")),
+        "pos", asc("apxF"), asc("id"))
+        .localCheckpoint(true)
+      val batch = math.max(k, batchSize)
+      var l = 0L
+      var certified = 0L
+      while (certified < k && l < unsampled) {
+        val batchIds = schedule.where(col("pos") >= l && col("pos") < l + batch)
+          .select(col("id").as("pivot"))
+        // exact farness per batch pivot; past the useBitset cap a batch is one
+        // wave-packed visit, O(n·maskCols) rows/superstep, not O(batch·n)
+        val (exactF, releaseBatch) =
+          if (useBitset(batch, n)) {
+            val vb = BitsetBfs.visit(spark, adjacency, batchIds,
+              maskCols = maskColsFor(batch), onSuperstep = countStep,
+              prep = prep())
+            (BitsetBfs.farness(vb), () => vb.release())
+          } else
+            (rowFarness(MultiBfs.run(spark, adjacency, batchIds, onSuperstep = countStep)),
+              () => ())
+        processed = mat.iterate(processed.unionAll(exactF), (l / batch).toInt, certified.toDouble)
+        // `processed` is materialized (mat.iterate is eager): the batch
+        // visit's cached superstep states are dead now
+        releaseBatch()
+        // positions are dense 0..unsampled-1, so [l, l+batch) holds
+        // min(batch, unsampled−l) ids — no count job
+        exactBfs += math.min(batch, unsampled - l)
+        l += batch
+        // ONE aggregate job per batch: the 1-row remainder aggregate — the
+        // largest possible true closeness among unprocessed candidates —
+        // broadcasts into a crossJoin and the certified count folds over it
+        // in the same action.
+        val remAgg = schedule.where(col("pos") >= l)
+          .agg(coalesce(max(lit(1.0) / nullif(col("apxF"), lit(0.0))), lit(0.0))
+            .as("maxRem"))
+        certified = processed
+          .crossJoin(broadcast(remAgg))
+          .agg(count(when(
+            col("farness") > 0 &&
+              lit(1.0) / col("farness") >= lit(1.0 + eps) * col("maxRem"), 1)))
+          .head().getLong(0)
+      }
     }
 
     // top-k among certified, ties on the k-th farness extended (T5,
@@ -241,7 +267,7 @@ object Chechik {
     // farness 0 = isolated vertex = closeness 0: ranks LAST, not first.
     // Distributed top-k (TakeOrderedAndProject boundary + tie filter), not
     // an unpartitioned rank() window — `processed` can grow to n rows.
-    val ranked = processed.get
+    val ranked = processed
       .withColumn("frank", when(col("farness") > 0, col("farness")).otherwise(Long.MaxValue))
     val topk = graft.core.Rank.topkWithTies(ranked, Seq(asc("frank")), k)(
         _.getAs[Long]("frank"))(b => col("frank") <= b.asInstanceOf[Long])
@@ -250,7 +276,7 @@ object Chechik {
         when(col("farness") > 0, lit(1.0) / col("farness")).otherwise(0.0).as("closeness"))
       .orderBy(asc("farness"), asc("id"))
 
-    bprep.release()
+    if (bprep != null) bprep.release()
     val telemetry = Telemetry(
       n = n, initialPivots = nPivots, sampleSize = sampleSize,
       exactBfs = exactBfs, totalBfs = nPivots + sampleSize + exactBfs,

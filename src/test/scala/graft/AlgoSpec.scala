@@ -135,6 +135,38 @@ class AlgoSpec extends SparkTestBase {
     val expected = far.takeWhile(_._2 <= kth).map(_._1).toSet
     assert(got.toSet === expected, s"got ${got.toSet} vs $expected")
     assert(tel.totalBfs > 0 && tel.supersteps > 0)
+    // forced sample: K = ⌈ln n / ε²⌉ ≥ n makes every keep-probability 1, so
+    // no pivot BFS runs and the sample visit's exact farness certifies all
+    assert(Chechik.kCoefficient(tel.n, 0.1) >= tel.n)
+    assert(tel.initialPivots === 0L)
+    assert(tel.sampleSize === tel.n)
+    assert(tel.exactBfs === 0L)
+    assert(tel.totalBfs === tel.n)
+  }
+
+  test("chechik unforced sample (K < n): certified top-k exact, no sampled vertex searched twice") {
+    // ε = 0.3 on 200 vertices: K = ⌈ln 200 / 0.09⌉ = 59 < n, so the pivot
+    // BFS decides a proper sample and the certification loop runs over V∖S
+    val edges = erGraph(200, 0.03, seed = 11)
+    val adj = adjOf(edges)
+    val k = 5
+    val eps = 0.3
+    val a = InMemoryOracle.adj(edges)
+    val far = InMemoryOracle.nodes(edges)
+      .map(v => v -> InMemoryOracle.geometric(a, v).farness).sortBy(x => (x._2, x._1))
+    val kth = far(k - 1)._2
+    val expected = far.takeWhile(_._2 <= kth).map(_._1).toSet
+    Seq(1, 2, 3).foreach { seed =>
+      val (topk, tel) = Chechik.topkCloseness(spark, adj, k = k, eps = eps, seed = seed)
+      assert(Chechik.kCoefficient(tel.n, eps) < tel.n)
+      val got = topk.collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("farness")).toMap
+      assert(got.keySet === expected, s"seed $seed: got ${got.keySet} vs $expected")
+      got.foreach { case (v, f) => assert(f === far.toMap.apply(v), s"seed $seed: farness($v)") }
+      assert(tel.initialPivots > 0L, s"seed $seed: $tel")
+      assert(tel.sampleSize < tel.n, s"seed $seed: $tel")
+      assert(tel.exactBfs <= tel.n - tel.sampleSize, s"seed $seed: $tel")
+      assert(tel.totalBfs === tel.initialPivots + tel.sampleSize + tel.exactBfs)
+    }
   }
 
   test("chechik estimator coefficients: closed form on path P3") {

@@ -94,9 +94,15 @@ class PlanSpec extends SparkTestBase {
     // Exercise the EXACT loop body (MultiBfs.step / stripState) at
     // superstep 2, whose prev state came through superstep 1 the way the
     // loop materializes it.
+    // Broadcast regime pinned: the fixture's cached adjacency is far below
+    // the 10 MB threshold, so it broadcasts into the frontier join and the
+    // message aggregate is the ONE hash exchange. Past the threshold (bench
+    // scale) the frontier join adds a frontier-sized exchange of its own;
+    // the state side stays exchange-free in both regimes.
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
     s.conf.set("spark.sql.shuffle.partitions", "4")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
     import s.implicits._
     val adj = graft.core.Graph.adjacency(graft.core.Graph.symmetrize(
       Seq(0L -> 1L, 1L -> 2L, 2L -> 3L, 3L -> 0L).toDF("src", "dst"))).persist()
@@ -119,6 +125,7 @@ class PlanSpec extends SparkTestBase {
     assert("Exchange hashpartitioning".r.findAllMatchIn(live).size == 1, plan)
     assert(live.contains("FullOuter"), plan)
     assert(!live.contains("SortMergeJoin"), plan)
+    assert(stateSideExchanges(next.queryExecution.executedPlan) == 0, plan)
     // the asserted plan must also be EXECUTABLE and RIGHT: superstep 2
     // newly reaches vertex 2 (dist 2); 0/1/3 keep their settled distances
     val got = next.collect()
@@ -126,5 +133,18 @@ class PlanSpec extends SparkTestBase {
     assert(got == Map(
       0L -> ((0, false)), 1L -> ((1, false)), 3L -> ((1, false)),
       2L -> ((2, true))), got)
+    // no broadcast: the frontier join shuffles too, the state still does not
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val unbroadcast = graft.algo.MultiBfs.step(st1, adj).queryExecution.executedPlan
+    assert(stateSideExchanges(unbroadcast) == 0, unbroadcast.toString)
   }
+
+  /** Shuffle exchanges under the state (left) side of the row-BFS merge. */
+  private def stateSideExchanges(plan: org.apache.spark.sql.execution.SparkPlan): Int =
+    plan.collectFirst {
+      case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.FullOuter => j.left
+    }.get.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }.size
 }

@@ -10,12 +10,26 @@ import sys, os, json, glob
 import duckdb
 import pandas as pd
 
+def default_mem_gb():
+    """80 % of MemTotal from /proc/meminfo (DuckDB's own default share) in
+    whole GB, at least 1; 8 when the file is unreadable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return max(1, int(line.split()[1]) * 4 // (5 * 1024 * 1024))
+    except OSError:
+        pass
+    return 8
+
 def load(sf_dir, out_dir):
     con = duckdb.connect()
-    # Bound DuckDB so heavy recursive-CTE oracles (g12 at sf0.1 needs >95 GB
-    # unbounded — OOM-killed 2026-08-19) spill to disk instead of taking the
-    # host down. Override via CHECK_MEM_GB.
-    mem_gb = os.environ.get("CHECK_MEM_GB", "40")
+    # Bound DuckDB below the host's RAM so an oversized oracle spills or
+    # fails with DuckDB's own out-of-memory error instead of being killed by
+    # the kernel (g12 at sf0.1 needs >95 GB). g22 at sf0.01 does not spill:
+    # it needs ~10.8 GB resident and fails at a 7 GB limit, so the default
+    # leaves it room on a 16 GB host. Override via CHECK_MEM_GB.
+    mem_gb = os.environ.get("CHECK_MEM_GB") or str(default_mem_gb())
     con.sql(f"SET memory_limit='{mem_gb}GB'")
     con.sql("SET temp_directory='/tmp/duckdb_spill'")
     for p in glob.glob(f"{sf_dir}/*.parquet"):
